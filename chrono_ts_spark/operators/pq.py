@@ -34,6 +34,11 @@ from pyspark.sql import functions as F
 from .clustering import guard_int64_partials
 from .topk import top_k_per_group
 
+# Upper bound on the rerank candidate rows (queries x rerank) that
+# pq_adc_topk broadcasts. The broadcast is unconditional, so its size
+# must be bounded by the caller's arguments, not by a plan estimate.
+RERANK_BROADCAST_MAX_ROWS = 1_000_000
+
 
 def _check_geometry(dims: int, m_sub: int) -> int:
     if dims % m_sub:
@@ -232,10 +237,18 @@ def pq_adc_topk(
     With rerank=R > 0, the ADC top-R candidates are re-scored with the
     exact squared L2 distance (joining the raw vectors back for the
     candidates only) before the final top-k — the standard
-    quality-recovery stage.
+    quality-recovery stage. The candidates are broadcast, so
+    ``len(queries) * rerank`` above RERANK_BROADCAST_MAX_ROWS raises
+    ValueError.
     """
     m_sub = codebook.shape[0]
     q_rows = queries.select(id_col, vec_col).collect()
+    if len(q_rows) * rerank > RERANK_BROADCAST_MAX_ROWS:
+        raise ValueError(
+            f"pq_adc_topk: {len(q_rows)} queries x rerank={rerank} "
+            f"candidates exceed RERANK_BROADCAST_MAX_ROWS="
+            f"{RERANK_BROADCAST_MAX_ROWS}; split the queries or lower rerank"
+        )
     tables = {}
     for r in q_rows:
         qv = np.array(list(r[1]), dtype=np.float64)
@@ -309,8 +322,9 @@ def pq_adc_topk(
     # exact re-rank: join raw vectors back for candidates only.
     # r16 (guide §3.1/§8): the candidate side is contractually tiny
     # (≤ P·max(k, rerank) rows — probes are few by the operator's
-    # contract), but its size ESTIMATE descends from the whole opaque
-    # ADC pipeline, so the static plan chose a SortMergeJoin whose
+    # contract, and P·rerank is capped at RERANK_BROADCAST_MAX_ROWS),
+    # but its size ESTIMATE descends from the whole opaque ADC
+    # pipeline, so the static plan chose a SortMergeJoin whose
     # build-side Exchange hash-partitioned the FULL corpus of raw
     # vectors (~0.5 KB/row) just to attach 64-dim arrays to a few
     # hundred rows — the §8 "second payload shuffle" trap; relying on

@@ -133,67 +133,53 @@ def assert_single_file_replay(sf_dir: str) -> None:
         )
 
 
-def _run_to_memory(
-    result: DataFrame, spark: SparkSession, output_mode: str = "complete"
-) -> DataFrame:
-    """Run an availableNow query into a memory sink; return the table.
-
-    The checkpoint dir is deleted once the bounded query terminates
-    (replays construct fresh state; the checkpoint has no further use).
-    The memory table itself lives for the session — callers collect
-    from it lazily, so it can't be dropped here.
-    """
-    import shutil
-
-    name = "mem_" + uuid.uuid4().hex[:10]
-    ckpt = tempfile.mkdtemp(prefix="chrono_ckpt_")
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
-
-
-def run_to_parquet(
+def run_to_sink(
     result: DataFrame,
     spark: SparkSession,
-    out_dir: str,
-    output_mode: str = "append",
+    output_mode: str,
+    sink_dir: str | None = None,
 ) -> DataFrame:
-    """Run an availableNow query into a PARQUET sink; return a reader.
+    """Run an availableNow query to completion and return its output.
 
-    The memory sink materializes the whole result driver-side, which
-    caps per-event-output streams (Kalman/EMA/Holt emit one row per
-    input event) at spark.driver.maxResultSize — the r9 10M streaming
-    probe hit exactly that (1 GiB of task results aborting the memory
-    sink's MicroBatchWrite). This is the production sink shape: state
-    stays on executors, output goes to files, the driver never holds
-    rows. The fixture-scale query registry keeps the memory sink (the
-    driver wants a collectable table); scale probes and any real
-    deployment use this.
+    ``sink_dir=None`` writes a memory sink and returns its table: the
+    fixture-scale shape (the driver collects the table, which lives
+    for the session). A ``sink_dir`` writes the production PARQUET
+    sink and returns a reader over it. The memory sink materializes the
+    whole result driver-side, which caps per-event-output streams
+    (EMA/Holt/Kalman/CUSUM emit one row per input event) at
+    spark.driver.maxResultSize — the r9 10M streaming probe hit exactly
+    that; through parquet, state stays on executors and the driver
+    never holds rows.
+
+    The query is stopped and its checkpoint directory removed whether
+    or not the stream fails: replays construct fresh state, so the
+    checkpoint has no further use, and a failing stream must not leak
+    a ``chrono_ckpt_*`` directory or an active query per call.
     """
     import shutil
 
     ckpt = tempfile.mkdtemp(prefix="chrono_ckpt_")
-    q = (
-        result.writeStream.format("parquet")
-        .option("path", out_dir)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(out_dir)
+    try:
+        w = (
+            result.writeStream.outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+        )
+        if sink_dir is None:
+            name = "mem_" + uuid.uuid4().hex[:10]
+            w = w.format("memory").queryName(name)
+        else:
+            w = w.format("parquet").option("path", sink_dir)
+        q = w.start()
+        try:
+            q.awaitTermination()
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    if sink_dir is None:
+        return spark.table(name)
+    return spark.read.parquet(sink_dir)
 
 
 def run_m4_stream(
@@ -241,7 +227,7 @@ def run_m4_stream(
         F.col("_l.value").alias("v_last"),
         "n_events",
     )
-    return _run_to_memory(out, spark)
+    return run_to_sink(out, spark, "complete")
 
 
 def run_tumbling_counts_stream(
@@ -272,7 +258,7 @@ def run_tumbling_counts_stream(
         "max_value",
         "avg_value",
     )
-    return _run_to_memory(out, spark)
+    return run_to_sink(out, spark, "complete")
 
 
 def run_sessionized_stream(
@@ -303,9 +289,8 @@ def run_sessionized_stream(
         ts_str(F.col("session_window.start")).alias("session_start"),
         "n_events",
     )
-    if sink_dir is not None:
-        return run_to_parquet(out, spark, sink_dir, output_mode="append")
-    return _run_to_memory(out, spark)
+    mode = "complete" if sink_dir is None else "append"
+    return run_to_sink(out, spark, mode, sink_dir)
 
 
 def run_stateful_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,7 +299,7 @@ def run_stateful_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     deduped = ev.dropDuplicatesWithinWatermark(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
-    return _run_to_memory(agg, spark)
+    return run_to_sink(agg, spark, "complete")
 
 
 def run_stream_static_enrich(
@@ -351,6 +336,4 @@ def run_stream_static_enrich(
     enriched = ev.join(static, "user_id").select(
         "event_id", "user_id", "tier", ts_str(F.col("ts")).alias("ts_s")
     )
-    if sink_dir is not None:
-        return run_to_parquet(enriched, spark, sink_dir, output_mode="append")
-    return _run_to_memory(enriched, spark, output_mode="append")
+    return run_to_sink(enriched, spark, "append", sink_dir)

@@ -1,11 +1,17 @@
 """Advanced streaming operators: sliding windows, stream-stream joins,
-and an arbitrary-stateful custom operator (SURVEY.md §2.9 ST3/J7/ST6).
+and the stateful per-key recurrences (SURVEY.md §2.9 ST3/J7/ST6).
 
-The stateful op is a per-series exponential moving average — the
-canonical "TSDB operator Spark lacks as a built-in" — implemented with
-``applyInPandasWithState``: state = the recurrence values per key
-(just the EMA), updated per micro-batch in event-time order, emitting
-one EMA row per event. Watermark bounds how long idle keys hold state.
+The order-dependent recurrences — EMA, Holt linear, the scalar Kalman
+filter and the online CUSUM chart — have ONE implementation each: a
+per-event ``fold`` closure run by ``bucketed_fold_update_fn`` inside
+``_run_bucketed``, the package's only ``applyInPandasWithState`` call.
+The group key is ``user_id % _N_BUCKETS`` and the state is every
+bucket member's recurrence values packed as sorted numpy buffers; each
+micro-batch is folded in (ts, event_id) order, emitting one row per
+event. Running extrema is a commutative monoid, so it needs no
+arbitrary-state API: a JVM-native update-mode aggregate keeps its
+state with zero Python round-trips. Watermarks bound how long idle
+keys hold state.
 """
 
 from __future__ import annotations
@@ -16,222 +22,46 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql import types as T
 
 from ..functions import ts_str
-from .replay import _run_to_memory, replay_events_stream
+from .replay import replay_events_stream, run_to_sink
 
-_EMA_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts_s", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("ema", T.DoubleType()),
-    ]
-)
-# state = recurrence values only (r7 review: the last_ts_us /
-# last_event_id fields of the removed replay guard were written every
-# batch but never read — dropped; _CUSUM_STATE was always this form)
-_EMA_STATE = T.StructType([T.StructField("ema", T.DoubleType())])
-
-
-def ema_update_fn(alpha: float):
-    """Build the applyInPandasWithState update function for EMA.
-
-    Self-contained closure (stdlib + pandas only) so Python workers can
-    unpickle it without importing this package.
-    """
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (ema,) = state.get if state.exists else (None,)
-        out = []
-        # Late-data policy: event-time order is guaranteed WITHIN a
-        # micro-batch (sorted here); an event arriving in a later batch
-        # behind the key's position is still folded in — streaming EMA
-        # is arrival-order-sensitive by nature and dropping in-watermark
-        # data would be silent loss. (State commits are atomic with
-        # batch offsets, so no replay guard is needed for retries.)
-        batch = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        for row in batch.itertuples():
-            ema = row.value if ema is None else alpha * row.value + (1 - alpha) * ema
-            out.append(
-                (
-                    key[0],
-                    row.event_id,
-                    row.ts.strftime("%Y-%m-%d %H:%M:%S"),
-                    row.value,
-                    ema,
-                )
-            )
-        state.update((ema,))
-        yield pd.DataFrame(
-            out, columns=["user_id", "event_id", "ts_s", "value", "ema"]
-        )
-
-    return update
-
-
-def run_ema_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    alpha: float = 0.2,
-    sink_dir: str | None = None,
-) -> DataFrame:
-    """ST6: per-user EMA over the replayed stream (arbitrary state).
-
-    ``sink_dir`` switches the memory sink (fixture-scale: the driver
-    collects the table) for the production parquet sink — EMA emits
-    ONE ROW PER INPUT EVENT, so its output is data-proportional and
-    the memory sink OOMs the local driver heap at the r11 30M probe
-    (same class as run_kalman_stream / sessions / enrich; the 30M
-    parquet-sink run completes)."""
-    ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    ema = ev.groupBy("user_id").applyInPandasWithState(
-        ema_update_fn(alpha),
-        outputStructType=_EMA_OUT,
-        stateStructType=_EMA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    if sink_dir is not None:
-        from .replay import run_to_parquet
-
-        return run_to_parquet(ema, spark, sink_dir, output_mode="append")
-    return _run_to_memory(ema, spark, output_mode="append")
-
+# State-store group count for the per-key folds: the value behind every
+# measured number in docs/scale.md (r14/r15: 4.7–5.9x faster than one
+# group per user at 60M rows / 60k users). At or below 1024 users the
+# plan has exactly one group per user, as a per-user plan would.
+_N_BUCKETS = 1024
 
 # shared packed-bucket state shape: sorted int64 user ids + their
-# float64 state rows, each as one binary buffer (EMA: 1 col; Holt/
-# Kalman: 2). Field names are cosmetic — access is positional.
-_PACKED_BUCKET_STATE = T.StructType(
-    [
-        T.StructField("ids", T.BinaryType()),
-        T.StructField("states", T.BinaryType()),
-    ]
-)
+# float64 state rows, each as one binary buffer. Field names are
+# cosmetic — access is positional.
+_PACKED_BUCKET_STATE = "ids binary, states binary"
 
-
-def ema_bucketed_update_fn(alpha: float):
-    """applyInPandasWithState update fn for BUCKETED per-user EMA:
-    the group key is ``user_id % n_buckets`` and the state is every
-    bucket member's (user_id, ema) packed as two binary arrays.
-
-    Why (r14, VERDICT r13 item 4): the 60M/64-batch probe showed a
-    ~12 s/batch FIXED cost in the per-user layout — not state size
-    but the per-group Python state round-trips (60k groups × state
-    get/update through the JVM↔Python protocol every batch). Bucketing
-    divides the group count by ~n_buckets while keeping the per-event
-    fold BIT-IDENTICAL: the batch is sorted globally by (ts,
-    event_id) — a total order, since event_id is unique — so each
-    user's subsequence is folded in exactly the per-user plan's order
-    with exactly the same IEEE-double op sequence (α·x + (1−α)·e).
-    State packs as sorted-by-id int64/float64 numpy buffers, so the
-    stored bytes are partition- and dict-order-independent.
-
-    Self-contained closure (stdlib + pandas + numpy only).
-    """
-    a = float(alpha)
-    b = 1.0 - a
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.exists:
-            ids_b, emas_b = state.get
-            cur = dict(
-                zip(
-                    np.frombuffer(ids_b, dtype=np.int64).tolist(),
-                    np.frombuffer(emas_b, dtype=np.float64).tolist(),
-                )
-            )
-        else:
-            cur = {}
-        batch = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        emas = []
-        get = cur.get
-        for uid, val in zip(
-            batch["user_id"].tolist(), batch["value"].tolist()
-        ):
-            e = get(uid)
-            e = val if e is None else a * val + b * e
-            cur[uid] = e
-            emas.append(e)
-        res = pd.DataFrame(
-            {
-                "user_id": batch["user_id"].to_numpy(),
-                "event_id": batch["event_id"].to_numpy(),
-                "ts_s": batch["ts"].dt.strftime("%Y-%m-%d %H:%M:%S"),
-                "value": batch["value"].to_numpy(),
-                "ema": emas,
-            }
-        )
-        ids = np.fromiter(cur.keys(), dtype=np.int64, count=len(cur))
-        vals = np.fromiter(cur.values(), dtype=np.float64, count=len(cur))
-        order = np.argsort(ids, kind="stable")
-        state.update((ids[order].tobytes(), vals[order].tobytes()))
-        yield res
-
-    return update
-
-
-def run_ema_stream_bucketed(
-    spark: SparkSession,
-    sf_dir: str,
-    alpha: float = 0.2,
-    sink_dir: str | None = None,
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Per-user EMA with the bucketed state layout (see
-    ema_bucketed_update_fn) — same output rows as run_ema_stream,
-    bit-exact, with ~n_buckets× fewer state-store groups per batch.
-    The per-user plan stays the registered query (it is the
-    arbitrary-state API surface the oracle pins); this is the
-    production posture for high-cardinality key spaces."""
-    ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    ema = (
-        ev.withColumn(
-            "__bucket", F.pmod(F.col("user_id"), F.lit(n_buckets))
-        )
-        .groupBy("__bucket")
-        .applyInPandasWithState(
-            ema_bucketed_update_fn(alpha),
-            outputStructType=_EMA_OUT,
-            stateStructType=_PACKED_BUCKET_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    if sink_dir is not None:
-        from .replay import run_to_parquet
-
-        return run_to_parquet(ema, spark, sink_dir, output_mode="append")
-    return _run_to_memory(ema, spark, output_mode="append")
+# leading output columns of every fold stream; each fold appends its own
+_FOLD_KEYS = "user_id bigint, event_id bigint, ts_s string, value double"
 
 
 def bucketed_fold_update_fn(n_state: int, fold, out_names: list):
-    """Generic bucketed-state update builder (r14): the
-    ema_bucketed_update_fn layout — group key = user_id % n_buckets,
-    state = the bucket's per-user float64 state rows packed as sorted
-    numpy buffers — parameterized by a per-event ``fold(state_tuple |
-    None, value) -> (new_state_tuple, out_values_tuple)`` closure.
+    """applyInPandasWithState update builder for a per-user recurrence
+    under the bucketed layout: group key = user_id % _N_BUCKETS, state
+    = the bucket's per-user float64 state rows packed as sorted numpy
+    buffers, parameterized by a per-event ``fold(state_tuple | None,
+    value) -> (new_state_tuple, out_values_tuple)`` closure.
 
-    Bit-exactness argument is inherited: the global (ts, event_id)
-    sort is a total order, so each user's subsequence folds in the
-    per-user plan's exact order with the same arithmetic. The fold
-    callback costs one extra Python call per event vs the inlined EMA
-    specialization (~0.1–0.2 s/batch at 1M-row batches) — EMA keeps
-    its inlined form; Holt/Kalman take this builder.
+    Why bucketed (r14, VERDICT r13 item 4): the 60M/64-batch probe
+    showed a ~12 s/batch FIXED cost in a one-group-per-user layout —
+    not state size but the per-group Python state round-trips (60k
+    groups × state get/update through the JVM↔Python protocol every
+    batch). Bucketing divides the group count by ~_N_BUCKETS while
+    keeping each user's fold exact: the batch is sorted globally by
+    (ts, event_id) — a total order, since event_id is unique — so each
+    user's subsequence folds in event order with the same IEEE-double
+    op sequence as a per-user loop. State packs as sorted-by-id
+    buffers, so the stored bytes are partition- and dict-order-
+    independent.
 
-    Self-contained closure (stdlib + pandas + numpy only).
+    Self-contained closure (stdlib + pandas + numpy only) so Python
+    workers can unpickle it without importing this package.
     """
 
     def update(
@@ -253,6 +83,12 @@ def bucketed_fold_update_fn(n_state: int, fold, out_names: list):
             }
         else:
             cur = {}
+        # Late-data policy: event-time order is guaranteed WITHIN a
+        # micro-batch (sorted here); an event arriving in a later batch
+        # behind its key's position is still folded in — the folds are
+        # arrival-order-sensitive by nature and dropping in-watermark
+        # data would be silent loss. (State commits are atomic with
+        # batch offsets, so no replay guard is needed for retries.)
         batch = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         extras: list[list] = [[] for _ in out_names]
         get = cur.get
@@ -286,42 +122,67 @@ def bucketed_fold_update_fn(n_state: int, fold, out_names: list):
 def _run_bucketed(
     spark: SparkSession,
     sf_dir: str,
-    update_fn,
-    out_schema: T.StructType,
+    fold,
+    n_state: int,
+    outputs: dict,
     sink_dir: str | None,
-    n_buckets: int,
 ) -> DataFrame:
+    """Run ``fold`` per user over the replayed stream; ``outputs`` maps
+    each fold output column to its SQL type, appended to _FOLD_KEYS.
+
+    ``sink_dir`` switches the memory sink (fixture-scale: the driver
+    collects the table) for the production parquet sink. Every fold
+    emits ONE ROW PER INPUT EVENT, so its output is data-proportional
+    and the memory sink OOMs the local driver heap at probe scale (the
+    r11 30M stream_ema probe; the 30M parquet-sink run completes)."""
     ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     res = (
         ev.withColumn(
-            "__bucket", F.pmod(F.col("user_id"), F.lit(n_buckets))
+            "__bucket", F.pmod(F.col("user_id"), F.lit(_N_BUCKETS))
         )
         .groupBy("__bucket")
         .applyInPandasWithState(
-            update_fn,
-            outputStructType=out_schema,
+            bucketed_fold_update_fn(n_state, fold, list(outputs)),
+            outputStructType=", ".join(
+                [_FOLD_KEYS] + [f"{n} {t}" for n, t in outputs.items()]
+            ),
             stateStructType=_PACKED_BUCKET_STATE,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    if sink_dir is not None:
-        from .replay import run_to_parquet
-
-        return run_to_parquet(res, spark, sink_dir, output_mode="append")
-    return _run_to_memory(res, spark, output_mode="append")
+    return run_to_sink(res, spark, "append", sink_dir)
 
 
-def run_holt_stream_bucketed(
+def run_ema_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    alpha: float = 0.2,
+    sink_dir: str | None = None,
+) -> DataFrame:
+    """ST6: per-user EMA over the replayed stream — ema = α·x + (1−α)·
+    prev, the first value seeding, the same IEEE op sequence as
+    batch_ema and the ts_ema oracle."""
+    a = float(alpha)
+    b = 1.0 - a
+
+    def fold(st, x):
+        e = x if st is None else a * x + b * st[0]
+        return (e,), (e,)
+
+    return _run_bucketed(spark, sf_dir, fold, 1, {"ema": "double"}, sink_dir)
+
+
+def run_holt_stream(
     spark: SparkSession,
     sf_dir: str,
     alpha: float = 0.3,
     beta: float = 0.1,
     sink_dir: str | None = None,
-    n_buckets: int = 1024,
 ) -> DataFrame:
-    """Bucketed-state Holt linear — same rows as run_holt_stream,
-    bit-exact (pinned in pytest), ~n_buckets× fewer state groups."""
+    """ST6: per-user Holt linear (level+trend) over the replayed stream
+    — the identical IEEE op sequence as the batch twin
+    (queries/extras.ts_holt_linear)."""
     a, b1, g, g1 = float(alpha), 1.0 - float(alpha), float(beta), 1.0 - float(beta)
 
     def fold(st, x):
@@ -335,25 +196,20 @@ def run_holt_stream_bucketed(
         return (lvl, trd), (lvl, trd)
 
     return _run_bucketed(
-        spark,
-        sf_dir,
-        bucketed_fold_update_fn(2, fold, ["level", "trend"]),
-        _HOLT_OUT,
-        sink_dir,
-        n_buckets,
+        spark, sf_dir, fold, 2, {"level": "double", "trend": "double"}, sink_dir
     )
 
 
-def run_kalman_stream_bucketed(
+def run_kalman_stream(
     spark: SparkSession,
     sf_dir: str,
     q: float = 1.0,
     r_noise: float = 4.0,
     sink_dir: str | None = None,
-    n_buckets: int = 1024,
 ) -> DataFrame:
-    """Bucketed-state scalar Kalman — same rows as run_kalman_stream,
-    bit-exact (pinned in pytest), ~n_buckets× fewer state groups."""
+    """ST6: per-user scalar Kalman filter over the replayed stream —
+    state (x, P), the identical IEEE op sequence as the batch twin
+    (queries/timeseries.ts_kalman_filter)."""
     qf, rf = float(q), float(r_noise)
 
     def fold(st, z):
@@ -368,35 +224,81 @@ def run_kalman_stream_bucketed(
         return (x, p), (x, p)
 
     return _run_bucketed(
-        spark,
-        sf_dir,
-        bucketed_fold_update_fn(2, fold, ["kalman", "err_var"]),
-        _KALMAN_OUT,
-        sink_dir,
-        n_buckets,
+        spark, sf_dir, fold, 2, {"kalman": "double", "err_var": "double"}, sink_dir
     )
 
 
-def run_running_extrema_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-NATIVE running extrema: min/max/count are commutative
-    monoids, so the recurrence needs no arbitrary-state API at all —
-    a plain update-mode streaming aggregation keeps all state in the
-    state store JVM-side with zero Python round-trips (VERDICT r13
-    item 4's 'JVM-native where closed forms exist'). Emits updated
-    rows per batch; the last row per user equals the batch aggregate
-    (pinned in tests). EMA/Holt/Kalman cannot take this path: their
-    folds are order-dependent affine compositions — associative but
-    NOT commutative — and Spark streaming aggregates require full
-    commutative monoids (no ordered-fold aggregate exists), so the
-    pandas-state layout (bucketed above) remains their floor."""
+def run_cusum_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    mu: float = 150.0,
+    sigma: float = 85.0,
+    k_sigma: float = 0.5,
+    h_sigma: float = 4.0,
+    sink_dir: str | None = None,
+) -> DataFrame:
+    """ST6b: per-user ONLINE CUSUM chart over the replayed stream,
+    monitored against known process parameters — the bit-identical
+    recursion of operators/changepoint.py with target=(mu, sigma).
+    State is two doubles per key regardless of history length, the
+    O(keys) property that makes the chart viable on an unbounded
+    stream. Unseen keys seed (0.0, 0.0); the alarm reset lands AFTER
+    the emitted row, so the output tuple is captured before zeroing."""
+    muf, slack = float(mu), float(k_sigma) * float(sigma)
+    h = float(h_sigma) * float(sigma)
+
+    def fold(st, x):
+        sp, sm = st if st is not None else (0.0, 0.0)
+        x = float(x)
+        sp = max(0.0, sp + ((x - muf) - slack))
+        sm = max(0.0, sm + ((muf - x) - slack))
+        alarm = 1 if (sp > h or sm > h) else 0
+        outs = (sp, sm, alarm)
+        if alarm:
+            sp = sm = 0.0
+        return (sp, sm), outs
+
+    return _run_bucketed(
+        spark,
+        sf_dir,
+        fold,
+        2,
+        {"s_plus": "double", "s_minus": "double", "alarm": "int"},
+        sink_dir,
+    )
+
+
+def run_running_extrema_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user running min/max/count as a JVM-NATIVE update-mode
+    streaming aggregate: min/max/count are commutative monoids, so the
+    recurrence needs no arbitrary-state API — all state stays in the
+    JVM state store with zero Python round-trips (VERDICT r13 item 4's
+    'JVM-native where closed forms exist'; 8.4x the pandas-state form
+    at 60M rows, docs/scale.md r14). Emits updated rows per batch; the
+    last row per user equals the batch aggregate. EMA/Holt/Kalman/CUSUM
+    cannot take this path: their folds are order-dependent — Spark
+    streaming aggregates require commutative monoids — so they ride
+    the bucketed pandas-state fold above."""
     ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     agg = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("value").alias("min_value"),
         F.max("value").alias("max_value"),
     )
-    snap = _run_to_memory(agg, spark, output_mode="update")
-    return _latest_snapshot_per_user(snap)
+    return _latest_snapshot_per_user(run_to_sink(agg, spark, "update"))
+
+
+def _latest_snapshot_per_user(snap: DataFrame) -> DataFrame:
+    """Keep only each user's final running-extrema row (micro-batches
+    emit one snapshot per active key per batch; max n_events = last)."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    return (
+        snap.withColumn("__r", F.row_number().over(w))
+        .filter(F.col("__r") == 1)
+        .drop("__r")
+    )
 
 
 def batch_ema(spark: SparkSession, sf_dir: str, alpha: float = 0.2) -> DataFrame:
@@ -455,182 +357,6 @@ def batch_ema(spark: SparkSession, sf_dir: str, alpha: float = 0.2) -> DataFrame
     )
 
 
-_HOLT_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts_s", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("level", T.DoubleType()),
-        T.StructField("trend", T.DoubleType()),
-    ]
-)
-_HOLT_STATE = T.StructType(
-    [
-        T.StructField("level", T.DoubleType()),
-        T.StructField("trend", T.DoubleType()),
-    ]
-)
-
-
-def holt_update_fn(alpha: float, beta: float):
-    """applyInPandasWithState update for Holt linear smoothing (ST6):
-    state = (level, trend, position); the recurrence is the identical
-    IEEE op sequence as the batch twin (queries/extras.ts_holt_linear),
-    so stream == batch bit-for-bit in arrival order. Self-contained
-    closure (stdlib + pandas only), same late-data policy as EMA."""
-    a, b1, g, g1 = alpha, 1.0 - alpha, beta, 1.0 - beta
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        lvl, trd = state.get if state.exists else (None, None)
-        out = []
-        batch = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        for row in batch.itertuples():
-            x = row.value
-            if lvl is None:
-                lvl, trd = x, 0.0
-            else:
-                nl = a * x + b1 * (lvl + trd)
-                trd = g * (nl - lvl) + g1 * trd
-                lvl = nl
-            out.append(
-                (
-                    key[0],
-                    row.event_id,
-                    row.ts.strftime("%Y-%m-%d %H:%M:%S"),
-                    x,
-                    lvl,
-                    trd,
-                )
-            )
-        state.update((lvl, trd))
-        yield pd.DataFrame(
-            out, columns=["user_id", "event_id", "ts_s", "value", "level", "trend"]
-        )
-
-    return update
-
-
-def run_holt_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    alpha: float = 0.3,
-    beta: float = 0.1,
-    sink_dir: str | None = None,
-) -> DataFrame:
-    """ST6: per-user Holt linear (level+trend) over the replayed stream.
-
-    ``sink_dir``: production parquet sink for the per-event output —
-    data-proportional through the memory sink, the r11 30M stream_ema
-    OOM class (see run_ema_stream)."""
-    ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    holt = ev.groupBy("user_id").applyInPandasWithState(
-        holt_update_fn(alpha, beta),
-        outputStructType=_HOLT_OUT,
-        stateStructType=_HOLT_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    if sink_dir is not None:
-        from .replay import run_to_parquet
-
-        return run_to_parquet(holt, spark, sink_dir, output_mode="append")
-    return _run_to_memory(holt, spark, output_mode="append")
-
-
-_KALMAN_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts_s", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("kalman", T.DoubleType()),
-        T.StructField("err_var", T.DoubleType()),
-    ]
-)
-_KALMAN_STATE = T.StructType(
-    [
-        T.StructField("x", T.DoubleType()),
-        T.StructField("p", T.DoubleType()),
-    ]
-)
-
-
-def kalman_update_fn(q: float, r_noise: float):
-    """applyInPandasWithState update for the scalar Kalman filter
-    (ST6): state = (x, P, position); identical IEEE op sequence as the
-    batch twin (queries/timeseries.ts_kalman_filter), so stream ==
-    batch bit-for-bit in arrival order. Same closure/late-data
-    contract as holt_update_fn."""
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        x, p = state.get if state.exists else (None, None)
-        out = []
-        batch = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        for row in batch.itertuples():
-            z = row.value
-            if x is None:
-                x, p = z, r_noise
-            else:
-                pp = p + q
-                k = pp / (pp + r_noise)
-                x = x + k * (z - x)
-                p = (1.0 - k) * pp
-            out.append(
-                (
-                    key[0],
-                    row.event_id,
-                    row.ts.strftime("%Y-%m-%d %H:%M:%S"),
-                    z,
-                    x,
-                    p,
-                )
-            )
-        state.update((x, p))
-        yield pd.DataFrame(
-            out,
-            columns=["user_id", "event_id", "ts_s", "value", "kalman", "err_var"],
-        )
-
-    return update
-
-
-def run_kalman_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    q: float = 1.0,
-    r_noise: float = 4.0,
-    sink_dir: str | None = None,
-) -> DataFrame:
-    """ST6: per-user scalar Kalman filter over the replayed stream.
-
-    ``sink_dir`` switches the memory sink (fixture-scale: the driver
-    collects the table) for the production parquet sink — per-event
-    output streams exceed driver.maxResultSize through the memory sink
-    at probe scale (replay.run_to_parquet)."""
-    ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    kf = ev.groupBy("user_id").applyInPandasWithState(
-        kalman_update_fn(q, r_noise),
-        outputStructType=_KALMAN_OUT,
-        stateStructType=_KALMAN_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    if sink_dir is not None:
-        from .replay import run_to_parquet
-
-        return run_to_parquet(kf, spark, sink_dir, output_mode="append")
-    return _run_to_memory(kf, spark, output_mode="append")
-
-
 def run_sliding_counts_stream(
     spark: SparkSession, sf_dir: str, width_s: int = 600, slide_s: int = 300
 ) -> DataFrame:
@@ -645,7 +371,7 @@ def run_sliding_counts_stream(
         "event_type",
         "n_events",
     )
-    return _run_to_memory(out, spark)
+    return run_to_sink(out, spark, "complete")
 
 
 def _purchase_click_join(
@@ -686,11 +412,7 @@ def _purchase_click_join(
         ts_str(F.col("p_ts")).alias("p_ts_s"),
         ts_str(F.col("c_ts")).alias("c_ts_s"),
     )
-    if sink_dir is not None:
-        from .replay import run_to_parquet
-
-        return run_to_parquet(out, spark, sink_dir, output_mode="append")
-    return _run_to_memory(out, spark, output_mode="append")
+    return run_to_sink(out, spark, "append", sink_dir)
 
 
 def run_stream_stream_join(
@@ -741,276 +463,3 @@ def run_stream_stream_join_left(
         spark, sf_dir, lookback_s, "leftOuter", "10 minutes", sink_dir=sink_dir
     )
 
-
-# ---------------------------------------------------------------------------
-# ST6 (modern API): transformWithStateInPandas stateful processor
-# ---------------------------------------------------------------------------
-
-
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs protobuf for its state protocol;
-    this container ships a broken google.protobuf (no descriptor
-    module), so detect and fall back to applyInPandasWithState."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def run_running_extrema_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running min/max/count via transformWithStateInPandas —
-    the Spark 4 arbitrary-state API (typed ValueState, timers, TTL) —
-    with an applyInPandasWithState fallback when the environment lacks
-    protobuf (same semantics, older state API).
-
-    Emits one row per micro-batch per active user with the running
-    extrema so far; the last row per user equals the batch min/max.
-    """
-    if not _tws_available():
-        return _run_running_extrema_apiws(spark, sf_dir)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("min_value", T.DoubleType()),
-            T.StructField("max_value", T.DoubleType()),
-        ]
-    )
-
-    class Extrema(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "extrema", "n BIGINT, mn DOUBLE, mx DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, mn, mx = (
-                self._state.get() if self._state.exists() else (0, None, None)
-            )
-            for pdf in rows:
-                vals = pdf["value"]
-                n += len(vals)
-                bmn, bmx = float(vals.min()), float(vals.max())
-                mn = bmn if mn is None else min(mn, bmn)
-                mx = bmx if mx is None else max(mx, bmx)
-            self._state.update((n, mn, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "min_value": [mn],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        Extrema(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="None",
-    )
-    snap = _run_to_memory(out, spark, output_mode="append")
-    return _latest_snapshot_per_user(snap)
-
-
-def _run_running_extrema_apiws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandasWithState twin of run_running_extrema_stream."""
-    out_schema = "user_id long, n_events long, min_value double, max_value double"
-    state_schema = "n BIGINT, mn DOUBLE, mx DOUBLE"
-
-    def update(key, pdfs, state):
-        n, mn, mx = state.get if state.exists else (0, None, None)
-        for pdf in pdfs:
-            vals = pdf["value"]
-            if len(vals):
-                n += len(vals)
-                bmn, bmx = float(vals.min()), float(vals.max())
-                mn = bmn if mn is None else min(mn, bmn)
-                mx = bmx if mx is None else max(mx, bmx)
-        state.update((n, mn, mx))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "min_value": [mn], "max_value": [mx]}
-        )
-
-    ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    out = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    snap = _run_to_memory(out, spark, output_mode="append")
-    return _latest_snapshot_per_user(snap)
-
-
-def _latest_snapshot_per_user(snap: DataFrame) -> DataFrame:
-    """Keep only each user's final running-extrema row (micro-batches
-    emit one snapshot per active key per batch; max n_events = last)."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        snap.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .drop("__r")
-    )
-
-
-# ---------------------------------------------------------------------------
-# ST6b: streaming CUSUM changepoint chart (online formulation)
-# ---------------------------------------------------------------------------
-
-_CUSUM_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts_s", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("s_plus", T.DoubleType()),
-        T.StructField("s_minus", T.DoubleType()),
-        T.StructField("alarm", T.IntegerType()),
-    ]
-)
-_CUSUM_STATE = T.StructType(
-    [
-        T.StructField("s_plus", T.DoubleType()),
-        T.StructField("s_minus", T.DoubleType()),
-    ]
-)
-
-
-def cusum_update_fn(mu: float, sigma: float, k_sigma: float, h_sigma: float):
-    """applyInPandasWithState update fn for the ONLINE CUSUM chart:
-    state = (s_plus, s_minus) per key, monitored against known process
-    parameters — bit-identical recursion to operators/changepoint.py
-    with target=(mu, sigma), so the batch op is the exact reference.
-    Self-contained closure (stdlib + pandas only)."""
-    slack = k_sigma * sigma
-    h = h_sigma * sigma
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        sp, sm = state.get if state.exists else (0.0, 0.0)
-        out = []
-        batch = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        for row in batch.itertuples():
-            x = float(row.value)
-            sp = max(0.0, sp + ((x - mu) - slack))
-            sm = max(0.0, sm + ((mu - x) - slack))
-            alarm = 1 if (sp > h or sm > h) else 0
-            out.append(
-                (
-                    key[0],
-                    int(row.event_id),
-                    row.ts.strftime("%Y-%m-%d %H:%M:%S"),
-                    x,
-                    sp,
-                    sm,
-                    alarm,
-                )
-            )
-            if alarm:
-                sp = sm = 0.0
-        state.update((sp, sm))
-        yield pd.DataFrame(
-            out,
-            columns=["user_id", "event_id", "ts_s", "value", "s_plus", "s_minus", "alarm"],
-        )
-
-    return update
-
-
-def run_cusum_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    mu: float = 150.0,
-    sigma: float = 85.0,
-    k_sigma: float = 0.5,
-    h_sigma: float = 4.0,
-    sink_dir: str | None = None,
-) -> DataFrame:
-    """ST6b: per-user online CUSUM over the replayed stream. State is
-    two doubles per key regardless of history length — the O(keys)
-    state property that makes the chart viable on an unbounded stream.
-
-    ``sink_dir``: production parquet sink. The chart emits ONE ROW PER
-    INPUT EVENT (the monitored statistic, alarm flagged), so its output
-    is data-proportional — the stream_ema memory-sink OOM class the r11
-    30M probe established. The r11 sink_dir sweep missed this runner
-    (it was never probed past fixture scale); tools/stream_probe.py's
-    first smoke run caught it via the rows==input count."""
-    ev = replay_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    out = ev.groupBy("user_id").applyInPandasWithState(
-        cusum_update_fn(mu, sigma, k_sigma, h_sigma),
-        outputStructType=_CUSUM_OUT,
-        stateStructType=_CUSUM_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    if sink_dir is not None:
-        from .replay import run_to_parquet
-
-        return run_to_parquet(out, spark, sink_dir, output_mode="append")
-    return _run_to_memory(out, spark, output_mode="append")
-
-
-def run_cusum_stream_bucketed(
-    spark: SparkSession,
-    sf_dir: str,
-    mu: float = 150.0,
-    sigma: float = 85.0,
-    k_sigma: float = 0.5,
-    h_sigma: float = 4.0,
-    sink_dir: str | None = None,
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Bucketed-state CUSUM — same rows as run_cusum_stream, bit-exact
-    (pinned in pytest), ~n_buckets x fewer state-store groups per batch
-    (r15, VERDICT r14 item 5: the last heavy per-user pandas-state
-    stream without a bucketed twin rides the r14 generic builder).
-
-    Fold mapping: the per-user fn seeds (0.0, 0.0) for unseen keys, so
-    ``st is None`` maps to that seed; the alarm reset happens AFTER the
-    emitted row, so the output tuple is captured before zeroing —
-    identical IEEE op sequence per event, and the builder's global
-    (ts, event_id) sort preserves each user's subsequence order."""
-    muf, slack = float(mu), float(k_sigma) * float(sigma)
-    h = float(h_sigma) * float(sigma)
-
-    def fold(st, x):
-        sp, sm = st if st is not None else (0.0, 0.0)
-        x = float(x)
-        sp = max(0.0, sp + ((x - muf) - slack))
-        sm = max(0.0, sm + ((muf - x) - slack))
-        alarm = 1 if (sp > h or sm > h) else 0
-        outs = (sp, sm, alarm)
-        if alarm:
-            sp = sm = 0.0
-        return (sp, sm), outs
-
-    return _run_bucketed(
-        spark,
-        sf_dir,
-        bucketed_fold_update_fn(2, fold, ["s_plus", "s_minus", "alarm"]),
-        _CUSUM_OUT,
-        sink_dir,
-        n_buckets,
-    )

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from chrono_ts_spark.operators.pq import (
+    RERANK_BROADCAST_MAX_ROWS,
     _encode_np,
     pq_adc_topk,
     pq_encode,
@@ -133,6 +134,18 @@ def test_full_rerank_is_exact(spark, corpus):
     out = pq_adc_topk(df, probes, cb, k=5, rerank=299)
     got = [r.neighbor_id for r in sorted(out.collect(), key=lambda r: r.rnk)]
     assert got == exact_topk(vecs, 0, 5)
+
+
+def test_rerank_broadcast_cap_rejected(spark, corpus):
+    # the rerank candidates are broadcast unconditionally, so a
+    # queries x rerank product above the cap must fail before any job
+    # builds them
+    df, _ = corpus
+    probes = df.filter(F.col("vec_id") < 3)
+    cb = np.zeros((4, 8, DIMS // 4))
+    rerank = RERANK_BROADCAST_MAX_ROWS // 3 + 1
+    with pytest.raises(ValueError, match="RERANK_BROADCAST_MAX_ROWS"):
+        pq_adc_topk(df, probes, cb, k=5, rerank=rerank)
 
 
 def test_bad_geometry_rejected(spark, corpus):

@@ -42,11 +42,13 @@ class TestEvalOnceIdentity:
         from chrono_ts_spark.catalog import load_table
 
         d = load_table(spark, SF_SMOKE, "documents")
-        plain = d.select(quality_score(F.col("text")).alias("q")).collect()
-        barred = d.select(
-            eval_once(quality_score(F.col("text"))).alias("q")
+        plain = d.select(
+            "doc_id", quality_score(F.col("text")).alias("q")
         ).collect()
-        assert [r.q for r in plain] == [r.q for r in barred]
+        barred = d.select(
+            "doc_id", eval_once(quality_score(F.col("text"))).alias("q")
+        ).collect()
+        assert sorted(map(tuple, plain)) == sorted(map(tuple, barred))
 
 
 class TestEvalOncePlanShape:

@@ -280,10 +280,10 @@ class TestCountTableQuantiles:
 
 class TestParquetSinkRunner:
     def test_parquet_sink_equals_memory_sink(self, spark, tmp_path):
-        # run_to_parquet is the production sink for per-event-output
-        # streams (the memory sink caps at driver.maxResultSize — the
-        # r9 10M probe aborted there); both sinks must carry the same
-        # rows at fixture scale.
+        # run_to_sink's parquet sink is the production sink for
+        # per-event-output streams (the memory sink caps at
+        # driver.maxResultSize — the r9 10M probe aborted there); both
+        # sinks must carry the same rows at fixture scale.
         from chrono_ts_spark.streaming.stateful import run_kalman_stream
 
         sf = "/root/testdata/sf0.001"

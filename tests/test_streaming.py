@@ -250,6 +250,9 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
 @pytest.mark.slow
 def test_running_extrema_stream_equals_batch(spark):
+    # The registry runs the JVM-native update-mode aggregation (zero
+    # Python state round-trips); min/max/count are commutative monoids,
+    # so its last snapshot per user must equal the batch aggregate.
     stream = REG["stream_running_extrema"].fn(spark, SF_SMOKE)
     batch = load_table(spark, SF_SMOKE, "events").groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -261,14 +264,19 @@ def test_running_extrema_stream_equals_batch(spark):
 
 
 @pytest.mark.slow
-def test_running_extrema_native_equals_batch(spark):
-    # The JVM-native update-mode aggregation (zero Python state
-    # round-trips) must agree with the batch aggregate exactly —
-    # min/max/count are commutative monoids, so this is the
-    # production path for monoid recurrences (r14, VERDICT r13 item 4).
-    from chrono_ts_spark.streaming.stateful import run_running_extrema_native
+def test_running_extrema_native_equals_batch(spark, monkeypatch):
+    # The public runner must stay JVM-native: it may never reach the
+    # pandas-state API (no Python state round-trips), and its last
+    # snapshot per user must still equal the batch aggregate exactly.
+    from pyspark.sql.group import GroupedData
 
-    stream = run_running_extrema_native(spark, SF_SMOKE)
+    from chrono_ts_spark.streaming.stateful import run_running_extrema_stream
+
+    def _no_python_state(*args, **kwargs):
+        raise AssertionError("running extrema reached applyInPandasWithState")
+
+    monkeypatch.setattr(GroupedData, "applyInPandasWithState", _no_python_state)
+    stream = run_running_extrema_stream(spark, SF_SMOKE)
     batch = load_table(spark, SF_SMOKE, "events").groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("value").alias("min_value"),
@@ -278,59 +286,165 @@ def test_running_extrema_native_equals_batch(spark):
     assert as_sorted_rows(stream, cols) == as_sorted_rows(batch, cols)
 
 
+def _write_event_files(spark, src, tmp_path, files):
+    """Write each ``name -> rows`` entry as ONE parquet file under
+    ``src`` in the raw nanos-as-long ``ts`` layout of the fixtures,
+    with increasing mtimes so the file source replays them in order,
+    one micro-batch per file."""
+    import os
+    import pathlib
+    import shutil
+
+    src = pathlib.Path(src)
+    src.mkdir(parents=True, exist_ok=True)
+    for i, (name, rows) in enumerate(files.items()):
+        staging = str(tmp_path / ("st_" + name))
+        df = spark.createDataFrame(
+            rows,
+            "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+        )
+        df.select(
+            "event_id", (F.unix_micros("ts") * 1000).alias("ts"),
+            "user_id", "event_type", "value", "props",
+        ).coalesce(1).write.mode("overwrite").parquet(staging)
+        part = next(pathlib.Path(staging).glob("part-*.parquet"))
+        shutil.copy(part, src / name)
+        os.utime(src / name, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _ref_ema(vals, alpha=0.2):
+    b = 1.0 - alpha
+    out, e = [], None
+    for x in vals:
+        e = x if e is None else alpha * x + b * e
+        out.append((e,))
+    return out
+
+
+def _ref_holt(vals, alpha=0.3, beta=0.1):
+    out, lvl, trd = [], None, None
+    for x in vals:
+        if lvl is None:
+            lvl, trd = x, 0.0
+        else:
+            nl = alpha * x + (1.0 - alpha) * (lvl + trd)
+            trd = beta * (nl - lvl) + (1.0 - beta) * trd
+            lvl = nl
+        out.append((lvl, trd))
+    return out
+
+
+def _ref_kalman(vals, q=1.0, r_noise=4.0):
+    out, x, p = [], None, None
+    for z in vals:
+        if x is None:
+            x, p = z, r_noise
+        else:
+            pp = p + q
+            k = pp / (pp + r_noise)
+            x = x + k * (z - x)
+            p = (1.0 - k) * pp
+        out.append((x, p))
+    return out
+
+
+def _ref_cusum(vals, mu=10.0, sigma=2.0, k_sigma=0.5, h_sigma=2.0):
+    slack, h = k_sigma * sigma, h_sigma * sigma
+    out, sp, sm = [], 0.0, 0.0
+    for x in vals:
+        sp = max(0.0, sp + ((x - mu) - slack))
+        sm = max(0.0, sm + ((mu - x) - slack))
+        alarm = 1 if (sp > h or sm > h) else 0
+        out.append((sp, sm, alarm))
+        if alarm:
+            sp = sm = 0.0
+    return out
+
+
+_FOLDS = {
+    "ema": ("run_ema_stream", {}, ["ema"], _ref_ema),
+    "holt": ("run_holt_stream", {}, ["level", "trend"], _ref_holt),
+    "kalman": ("run_kalman_stream", {}, ["kalman", "err_var"], _ref_kalman),
+    "cusum": (
+        "run_cusum_stream",
+        dict(mu=10.0, sigma=2.0, k_sigma=0.5, h_sigma=2.0),
+        ["s_plus", "s_minus", "alarm"],
+        _ref_cusum,
+    ),
+}
+
+
 @pytest.mark.slow
-def test_ema_bucketed_equals_per_user(spark):
-    # The bucketed state layout (user_id % n_buckets group key, packed
-    # binary state) must reproduce the per-user plan BIT-EXACTLY: the
-    # global (ts, event_id) sort is a total order, so each user's fold
-    # sequence and arithmetic are identical (r14, VERDICT r13 item 4).
-    from chrono_ts_spark.streaming.stateful import (
-        run_ema_stream,
-        run_ema_stream_bucketed,
-    )
+@pytest.mark.parametrize("fold", sorted(_FOLDS))
+def test_fold_stream_equals_plain_recurrence(spark, tmp_path, monkeypatch, fold):
+    """Each registry fold stream must equal its recurrence written out
+    per user in plain Python, bit for bit. Users 3, 1027 and 2051 share
+    state bucket 3 (user_id % 1024), user 4 sits alone; events
+    interleave across users, ties on ts are broken by event_id (file
+    order disagrees), and the second file is a second micro-batch, so
+    per-user state must cross both the bucket and the batch boundary."""
+    from datetime import datetime, timezone
 
-    per_user = run_ema_stream(spark, SF_SMOKE)
-    bucketed = run_ema_stream_bucketed(spark, SF_SMOKE, n_buckets=7)
-    cols = ["user_id", "event_id", "ts_s", "value", "ema"]
-    assert as_sorted_rows(bucketed, cols) == as_sorted_rows(per_user, cols)
+    import chrono_ts_spark.streaming.stateful as stateful
+
+    runner, kwargs, out_cols, ref = _FOLDS[fold]
+    t = lambda m: datetime(2024, 1, 1, 10, m, 0, tzinfo=timezone.utc)
+    first = [
+        (1, t(0), 3, 10.0), (2, t(0), 1027, 14.0), (4, t(1), 2051, 9.0),
+        (5, t(1), 3, 12.0), (3, t(1), 3, 16.0), (6, t(2), 4, 11.0),
+        (8, t(2), 1027, 5.0), (7, t(2), 1027, 17.0),
+    ]
+    second = [
+        (10, t(4), 2051, 13.0), (9, t(4), 2051, 15.0), (11, t(5), 3, 8.0),
+        (12, t(5), 4, 14.0), (13, t(6), 1027, 11.0), (14, t(6), 3, 19.0),
+    ]
+    src = tmp_path / "fold_src"
+    _write_event_files(
+        spark, src, tmp_path,
+        {
+            "events.parquet": [(e, ts, u, "c", v, "{}") for e, ts, u, v in first],
+            "events2.parquet": [(e, ts, u, "c", v, "{}") for e, ts, u, v in second],
+        },
+    )
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_GLOB", "events*.parquet")
+    stream = getattr(stateful, runner)(spark, str(src), **kwargs)
+
+    want = []
+    for user in {u for _, _, u, _ in first + second}:
+        evs = sorted(
+            (ts, e, v) for e, ts, u, v in first + second if u == user
+        )
+        for (ts, e, v), outs in zip(evs, ref([v for _, _, v in evs])):
+            want.append(
+                (user, e, ts.strftime("%Y-%m-%d %H:%M:%S"), v) + outs
+            )
+    cols = ["user_id", "event_id", "ts_s", "value"] + out_cols
+    assert as_sorted_rows(stream, cols) == sorted(want)
 
 
 @pytest.mark.slow
-def test_holt_kalman_bucketed_equal_per_user(spark):
-    # The generic bucketed-fold builder must reproduce the per-user
-    # plans bit-exactly for both 2-field recurrences (r14).
-    from chrono_ts_spark.streaming.stateful import (
-        run_holt_stream,
-        run_holt_stream_bucketed,
-        run_kalman_stream,
-        run_kalman_stream_bucketed,
-    )
+@pytest.mark.parametrize("sink", ["memory", "parquet"])
+def test_failed_stream_releases_checkpoint_and_query(spark, tmp_path, sink):
+    """A stream whose fold raises must surface the failure and still
+    stop its query and remove its checkpoint directory."""
+    import glob
+    import os
+    import tempfile
 
-    h_cols = ["user_id", "event_id", "ts_s", "value", "level", "trend"]
-    assert as_sorted_rows(
-        run_holt_stream_bucketed(spark, SF_SMOKE, n_buckets=7), h_cols
-    ) == as_sorted_rows(run_holt_stream(spark, SF_SMOKE), h_cols)
+    from pyspark.errors import StreamingQueryException
 
-    k_cols = ["user_id", "event_id", "ts_s", "value", "kalman", "err_var"]
-    assert as_sorted_rows(
-        run_kalman_stream_bucketed(spark, SF_SMOKE, n_buckets=7), k_cols
-    ) == as_sorted_rows(run_kalman_stream(spark, SF_SMOKE), k_cols)
+    from chrono_ts_spark.streaming.stateful import _run_bucketed
 
+    def fold(st, x):
+        raise RuntimeError("fold failure")
 
-@pytest.mark.slow
-def test_cusum_bucketed_equals_per_user(spark):
-    # r15 (VERDICT r14 item 5): the last heavy per-user pandas-state
-    # stream rides the generic bucketed-fold builder; the alarm reset
-    # must land AFTER the emitted row, exactly as the per-user fn does.
-    from chrono_ts_spark.streaming.stateful import (
-        run_cusum_stream,
-        run_cusum_stream_bucketed,
-    )
-
-    cols = ["user_id", "event_id", "ts_s", "value", "s_plus", "s_minus", "alarm"]
-    assert as_sorted_rows(
-        run_cusum_stream_bucketed(spark, SF_SMOKE, n_buckets=7), cols
-    ) == as_sorted_rows(run_cusum_stream(spark, SF_SMOKE), cols)
+    pattern = os.path.join(tempfile.gettempdir(), "chrono_ckpt_*")
+    before = set(glob.glob(pattern))
+    sink_dir = None if sink == "memory" else str(tmp_path / "sink")
+    with pytest.raises(StreamingQueryException, match="fold failure"):
+        _run_bucketed(spark, SF_SMOKE, fold, 1, {"x": "double"}, sink_dir)
+    assert set(glob.glob(pattern)) <= before
+    assert spark.streams.active == []
 
 
 @pytest.mark.slow
@@ -385,24 +499,7 @@ def test_ema_stream_keeps_same_microsecond_events(spark, tmp_path):
     t0 = datetime(2024, 1, 1, 10, 0, 0)
     rows = [(1, t0, 7, "click", 10.0, "{}"), (2, t0, 7, "click", 20.0, "{}"),
             (3, datetime(2024, 1, 1, 10, 1, 0), 7, "click", 30.0, "{}")]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    )
-    # write in the raw nanos-as-long layout; the replay source expects a
-    # single FILE named events.parquet (like the fixtures), so extract
-    # the part file from the written directory
-    staging = str(tmp_path / "staging")
-    df.select(
-        "event_id",
-        (F.unix_micros("ts") * 1000).alias("ts"),
-        "user_id", "event_type", "value", "props",
-    ).coalesce(1).write.mode("overwrite").parquet(staging)
-    import pathlib
-    import shutil
-
-    pathlib.Path(src).mkdir(parents=True, exist_ok=True)
-    part = next(pathlib.Path(staging).glob("part-*.parquet"))
-    shutil.copy(part, src + "/events.parquet")
+    _write_event_files(spark, src, tmp_path, {"events.parquet": rows})
     out = run_ema_stream(spark, src, alpha=0.5).collect()
     got = {r.event_id: r.ema for r in out}
     assert len(out) == 3, out
@@ -484,68 +581,31 @@ def test_cusum_stream_equals_batch(spark):
 
 
 @pytest.mark.slow
-def test_cusum_stream_state_crosses_batches(spark, tmp_path):
+def test_cusum_stream_state_crosses_batches(spark, tmp_path, monkeypatch):
     """Two files -> two micro-batches: the (s_plus, s_minus) state must
     carry across the batch boundary (no restart at zero)."""
     from datetime import datetime
 
     from chrono_ts_spark.streaming.stateful import run_cusum_stream
-    import pathlib
 
-    src = pathlib.Path(tmp_path / "cusum_src")
-    src.mkdir(parents=True)
-
-    def write_file(name, rows):
-        staging = str(tmp_path / ("st_" + name))
-        df = spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-        )
-        df.select(
-            "event_id", (F.unix_micros("ts") * 1000).alias("ts"),
-            "user_id", "event_type", "value", "props",
-        ).coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(pathlib.Path(staging).glob("part-*.parquet"))
-        import shutil
-
-        shutil.copy(part, src / name)
-
+    src = tmp_path / "cusum_src"
     t = lambda m: datetime(2024, 1, 1, 10, m, 0)
     # mu=10, sigma=2 -> slack=1, h=4 (h_sigma=2). Values of 13 add 2 per
     # step to s_plus; the alarm needs 3 steps, which only happens if
     # state survives the file boundary after 2 steps.
-    write_file("events.parquet", [(1, t(0), 5, "c", 13.0, "{}"),
-                                  (2, t(1), 5, "c", 13.0, "{}")])
-    write_file("events2.parquet", [(3, t(2), 5, "c", 13.0, "{}")])
-
-    # pathGlobFilter only matches events.parquet; widen via a direct run.
-    # (This test writes its own ns-as-bigint files above, so it declares
-    # that encoding locally — replay.py now discovers the encoding from
-    # the footer instead of exporting a fixed schema.)
-    from chrono_ts_spark.streaming.stateful import cusum_update_fn, _CUSUM_OUT, _CUSUM_STATE
-    from chrono_ts_spark.streaming.replay import _run_to_memory
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ns_schema = (
-        "event_id long, ts long, user_id long, "
-        "event_type string, value double, props string"
+    _write_event_files(
+        spark, src, tmp_path,
+        {
+            "events.parquet": [(1, t(0), 5, "c", 13.0, "{}"),
+                               (2, t(1), 5, "c", 13.0, "{}")],
+            "events2.parquet": [(3, t(2), 5, "c", 13.0, "{}")],
+        },
     )
-    raw = (
-        spark.readStream.format("parquet")
-        .schema(ns_schema)
-        .option("maxFilesPerTrigger", "1")
-        .load(str(src))
-        .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        .withWatermark("ts", "1 hour")
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_GLOB", "events*.parquet")
+    out = run_cusum_stream(
+        spark, str(src), mu=10.0, sigma=2.0, k_sigma=0.5, h_sigma=2.0
     )
-    out = raw.groupBy("user_id").applyInPandasWithState(
-        cusum_update_fn(10.0, 2.0, 0.5, 2.0),
-        outputStructType=_CUSUM_OUT,
-        stateStructType=_CUSUM_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    rows = {r.event_id: r for r in _run_to_memory(out, spark, "append").collect()}
+    rows = {r.event_id: r for r in out.collect()}
     assert len(rows) == 3
     assert rows[1].s_plus == 2.0 and rows[1].alarm == 0
     assert rows[2].s_plus == 4.0 and rows[2].alarm == 0

@@ -10,9 +10,11 @@ Builds a SINGLE-FILE events corpus (the single-micro-batch replay
 premise that the upsert/alert oracles require — replay.py's
 assert_single_file_replay) and runs the full streaming family against
 it, memory sinks for bounded-output streams and parquet sinks for the
-data-proportional ones (the r11 rule: EMA/Holt/Kalman/sessions/enrich
-emit O(input) rows and must never cross a collecting sink at probe
-scale).
+data-proportional ones (the r11 rule: EMA/Holt/Kalman/CUSUM/sessions/
+enrich emit O(input) rows and must never cross a collecting sink at
+probe scale). One arm per stream: the per-user-vs-bucketed and
+pandas-state-vs-native A/Bs are closed, their answers recorded in
+docs/scale.md (r14/r15).
 
     python tools/stream_probe.py [rows] [users] [--only name1,name2]
     # default 60_000_000 rows, rows//1000 users (the ts-probe series
@@ -171,14 +173,9 @@ def main() -> int:
     )
     from chrono_ts_spark.streaming.stateful import (
         run_cusum_stream,
-        run_cusum_stream_bucketed,
         run_ema_stream,
-        run_ema_stream_bucketed,
         run_holt_stream,
-        run_holt_stream_bucketed,
-        run_kalman_stream_bucketed,
         run_kalman_stream,
-        run_running_extrema_native,
         run_running_extrema_stream,
         run_sliding_counts_stream,
         run_stream_stream_join,
@@ -206,10 +203,6 @@ def main() -> int:
         ("dedup_counts", lambda s, sf: run_stateful_dedup_stream(s, sf).count()),
         ("sliding", lambda s, sf: run_sliding_counts_stream(s, sf).count()),
         ("running_extrema", lambda s, sf: run_running_extrema_stream(s, sf).count()),
-        # r14 per-batch-overhead A/B (VERDICT r13 item 4): JVM-native
-        # update-mode agg (zero Python state round-trips) vs the
-        # pandas-state twin above; bucketed-state EMA vs per-user below
-        ("extrema_native", lambda s, sf: run_running_extrema_native(s, sf).count()),
         # the serving tier + the pipeline on top of it
         ("upsert_merge", lambda s, sf: reg["stream_upsert_counts"].fn(s, sf).count()),
         ("alert_burst", lambda s, sf: reg["stream_alert_burst"].fn(s, sf).count()),
@@ -221,14 +214,10 @@ def main() -> int:
         ("sessions_parquet", sink(run_sessionized_stream)),
         ("enrich_parquet", sink(run_stream_static_enrich)),
         ("ema_parquet", sink(run_ema_stream)),
-        ("ema_bucketed_parquet", sink(run_ema_stream_bucketed)),
-        ("holt_bucketed_parquet", sink(run_holt_stream_bucketed)),
-        ("kalman_bucketed_parquet", sink(run_kalman_stream_bucketed)),
         ("holt_parquet", sink(run_holt_stream)),
         ("kalman_parquet", sink(run_kalman_stream)),
         # one row per input event (found by this harness's smoke run)
         ("cusum_parquet", sink(run_cusum_stream)),
-        ("cusum_bucketed_parquet", sink(run_cusum_stream_bucketed)),
     ]
 
     def restart(hard: bool = False):
